@@ -27,8 +27,10 @@ which we materialize with count()).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -141,13 +143,10 @@ PER_QUERY_NOTES = {
         "routed through the session-shared bucketed shingle landing "
         "(r11; BASELINE.md 'Registry routed through the shared "
         "landing'): the alphabetically-first dedup-family query in the "
-        "bench loop pays the per-session landing setup on ITS run 1 — "
-        "since r13 that is normally just ADOPTION of the previous "
-        "session's completed landing (external bucketed declaration "
-        "over the marked files, fingerprint-checked; BASELINE.md r13 "
-        "post-mortem), the full ~4 s write only on a genuine corpus "
-        "change. Later runs and the rest of the family (q35/q35b) "
-        "reuse it — min-of-N reports the amortized path, the "
+        "bench loop pays the per-session landing write (~4 s at sf0.1) "
+        "on ITS run 1; landings live for one session, so every bench "
+        "run pays it once. Later runs and the rest of the family "
+        "(q35/q35b) reuse it — min-of-N reports the amortized path, the "
         "write-once/join-many posture the landing exists to measure. "
         "A/B'd -19% vs ad-hoc at sf0.1 (q35 -40%, q35b flat); "
         "SPARK_GRAFT_DEDUP_LANDING=0 is the ad-hoc lever"
@@ -184,8 +183,7 @@ PER_QUERY_NOTES = {
         "alphabetically-first member of the events family routed "
         "through the session-shared user-key-bucketed events landing "
         "(r16; BASELINE.md 'Events family routed'): ITS run 1 pays the "
-        "per-session landing setup (~3.9 s write at sf0.1, or marker "
-        "ADOPTION of a previous session's landing) — min-of-N reports "
+        "per-session landing write (~3.9 s at sf0.1) — min-of-N reports "
         "the amortized path, and the rest of the family (q71/q73/q74/"
         "q89/q98/q105/q110/q149/q177) reuses it. Family A/B at sf0.1: "
         "best-sum 4.93 -> 3.52 s (-29%) with zero user-key exchanges "
@@ -290,7 +288,7 @@ PER_QUERY_NOTES = {
         "window — zero corpus-keyed exchanges, plan-asserted. A/B at "
         "sf0.1 (loaded host, min-of-6): 1.40 ad-hoc -> 0.90 landed. "
         "First retrieval query per session pays the landing write "
-        "(~2.5-5 s at sf0.1) or adopts a marked one; "
+        "(~2.5-5 s at sf0.1); "
         "SPARK_GRAFT_RETRIEVAL_LANDING=0 is the ad-hoc lever. Residual "
         "vs a ~0.34 s oracle is multi-stage scheduler floor"
     ),
@@ -378,21 +376,27 @@ PER_QUERY_NOTES = {
         "r8-r13 span ~0.3 s around the same floor (BASELINE.md 'q165 "
         "final position'), and the path is sub-linear at 10x/30x, so "
         "the ratio IMPROVES with scale. detail['landing'] records "
-        "whether this run's samples adopted or wrote the landing"
+        "when this run wrote the landing and which samples reused it"
     ),
 }
 
 
-# Names printed in the PREVIOUS round's one-line "queries" sample
-# (BENCH_r17.json). The round-over-round PERF comparator reads ONLY the
-# printed line, so a query that merely got FASTER and fell out of the
-# top-10 shows up as a false "dropped_from_bench" row (r17: q67/q79/q88
-# were flagged while actually ~3x faster — VERDICT r17 item #3). The
-# printed map is therefore the top-10 slowest UNION the previous round's
-# printed names (driver contract allows ADDING entries, never removing):
-# every name the comparator saw last round stays present with its
-# current seconds, so exits from the top-10 compare as speedups instead
-# of drops. Bounded at <= 20 entries; the size contract test covers it.
+# Names printed in the PREVIOUS round's one-line "queries" sample. The
+# round-over-round PERF comparator reads ONLY the printed line, so a
+# query that merely got FASTER and fell out of the top-10 shows up as a
+# false "dropped_from_bench" row (r17: q67/q79/q88 were flagged while
+# actually ~3x faster — VERDICT r17 item #3). The printed map is
+# therefore the top-10 slowest UNION the previous round's printed names
+# (driver contract allows ADDING entries, never removing): every name
+# the comparator saw last round stays present with its current seconds,
+# so exits from the top-10 compare as speedups instead of drops.
+#
+# Read per run by prev_printed_queries() from the newest committed round
+# artifact (BENCH_r<N>.json with the highest N: the keys of
+# parsed.queries). The carried names are capped to the _PREV_PRINTED_MAX
+# slowest so the union cannot grow round over round; the size contract
+# test covers it. The tuple below is the fallback when no readable
+# artifact exists.
 PREV_PRINTED_QUERIES = (
     "q35b_ngram_jaccard_prefix",
     "q139_pagerank_topk",
@@ -405,6 +409,25 @@ PREV_PRINTED_QUERIES = (
     "q54_curation_pipeline",
     "q115_leakage_safe_split",
 )
+_PREV_PRINTED_MAX = 20
+
+
+def prev_printed_queries() -> tuple[str, ...]:
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds = []
+    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
+        if m:
+            rounds.append((int(m.group(1)), path))
+    if not rounds:
+        return PREV_PRINTED_QUERIES
+    try:
+        with open(max(rounds)[1]) as f:
+            printed = json.load(f)["parsed"]["queries"]
+        slowest = sorted(printed, key=lambda k: -float(printed[k]))
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return PREV_PRINTED_QUERIES
+    return tuple(slowest[:_PREV_PRINTED_MAX]) or PREV_PRINTED_QUERIES
 
 
 def _clear_session_state(spark) -> None:
@@ -631,7 +654,7 @@ def build_summary(
     slowest = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:10]
     )
-    for name in PREV_PRINTED_QUERIES:
+    for name in prev_printed_queries():
         if name in timings:
             slowest.setdefault(name, timings[name])
     summary = {
@@ -1008,13 +1031,13 @@ def main() -> None:
     detail["query_samples"] = samples
     detail["query_starts"] = starts
     detail["spark_phase_epoch"] = spark_phase_epoch
-    # Landing decisions (r14 verdict #3): what the dedup family's shared
-    # shingle landing actually DID this run (written / re-landed /
-    # adopted / session-reuse, with landed stat bytes) and which
-    # prefix-checkpoint branch q35b took — the r13 q35b driver-env gap
-    # was undiagnosable because the artifact couldn't say whether the
-    # driver's samples paid the landing write. Epochs in the events align
-    # with spark_phase_epoch + query_starts offsets.
+    # Landing decisions (r14 verdict #3): what the shared landings
+    # actually DID this run (written / session-reuse, with landed stat
+    # bytes and build seconds) and which prefix-checkpoint branch q35b
+    # took — the r13 q35b driver-env gap was undiagnosable because the
+    # artifact couldn't say whether the driver's samples paid the
+    # landing write. Epochs in the events align with spark_phase_epoch
+    # + query_starts offsets.
     try:
         from franzoxide_spark.operators import dedup as _dedup
 
@@ -1023,15 +1046,14 @@ def main() -> None:
             "prefix_checkpoint_decisions": list(_dedup.PREFIX_DECISIONS),
         }
         # r17 VERDICT #1: landing-write seconds this run actually paid,
-        # ON the printed line — 0.0 means every landing was adopted from
-        # a prior session's files (or none was touched), a positive value
-        # is the in-run build cost the suite total amortizes. The full
-        # event list (who wrote/adopted what, when) stays in the detail.
+        # ON the printed line — the in-run build cost the suite total
+        # amortizes (0.0 when no landing was touched). The full event
+        # list (what was written or reused, when) stays in the detail.
         landing_build_s = round(
             sum(
                 e.get("secs", 0.0)
                 for e in _dedup.LANDING_EVENTS
-                if e.get("decision") in ("written", "re-landed")
+                if e.get("decision") == "written"
             ),
             2,
         )

@@ -52,7 +52,7 @@ def main() -> None:
     # land once, bucketed by the raw user key and in-bucket sorted by
     # (key, ts) — the write is the amortized cost. This is the
     # operators/landing.py API the r16 registry routing will use
-    # (shared_events_relation adds the session/marker/adoption flow).
+    # (shared_events_relation adds the land-once-per-session cache).
     from franzoxide_spark.operators.landing import land_events_relation
 
     spark.sql("DROP TABLE IF EXISTS events_by_user")

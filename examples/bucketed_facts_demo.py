@@ -22,7 +22,7 @@ the land-once/join-many trade amortizes (same cost model as the
 shingle/events/posting landings).
 
 Usage: python examples/bucketed_facts_demo.py
-  [env: SPARK_GRAFT_FACTS_R ("10,30"), SPARK_GRAFT_BENCH_RUNS (3),
+  [env: SPARK_GRAFT_SLOPE_SCALES ("10,30"), SPARK_GRAFT_BENCH_RUNS (3),
    SPARK_GRAFT_SF_DIR (/root/testdata/sf0.1)]
 Prints one JSON document; results are recorded in BASELINE.md.
 """
@@ -104,7 +104,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     scales = [
         int(x)
-        for x in os.environ.get("SPARK_GRAFT_FACTS_R", "10,30").split(",")
+        for x in os.environ.get(
+            "SPARK_GRAFT_SLOPE_SCALES", "10,30"
+        ).split(",")
     ]
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     work = tempfile.mkdtemp(prefix="bucketed_facts_")

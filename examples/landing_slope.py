@@ -19,9 +19,9 @@ Replica construction (realistic growth modes):
 Arms share one session; ``SPARK_GRAFT_EVENTS_LANDING`` /
 ``SPARK_GRAFT_RETRIEVAL_LANDING`` are read per query call, so the
 landed and ad-hoc arms alternate inside the same host window. The
-landing build (write + adopt) is timed separately and reported as
-``land_s`` — it amortizes over the whole family, so it is NOT added to
-per-query times (same accounting as the r16 events-family A/B).
+landing build (the per-session write) is timed separately and reported
+as ``land_s`` — it amortizes over the whole family, so it is NOT added
+to per-query times (same accounting as the r16 events-family A/B).
 
 Usage: python examples/landing_slope.py [env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_SLOPE_SCALES="1,10,30", SPARK_GRAFT_BENCH_RUNS (3)]

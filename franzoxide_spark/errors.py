@@ -16,10 +16,6 @@ class ConfigError(ConnectorError):
     pass
 
 
-class SourceError(ConnectorError):
-    """Kafka/file source failures (reference: KafkaError)."""
-
-
 class SinkError(ConnectorError):
     """Object-store sink failures (reference: S3Error)."""
 

@@ -37,11 +37,6 @@ def cosine_rounded(a: str, b: str, digits: int = 6) -> Column:
     return F.round(cosine(a, b), digits)
 
 
-def sql_cosine_rounded(a: str, b: str, digits: int = 6) -> str:
-    return (f"ROUND(list_cosine_similarity(CAST({a} AS DOUBLE[]),"
-            f" CAST({b} AS DOUBLE[])), {digits})")
-
-
 # --------------------------------------------------------------------------
 # scalar int8 quantization (the memory-bandwidth lever for ANN at scale:
 # 4 bytes/dim -> 1 byte/dim; IVF/LSH shortlists scan quantized codes and

@@ -1,35 +1,130 @@
-"""Family-agnostic write-once/join-many landings (r16 plan item #1,
-groundwork landed r15).
+"""Write-once/join-many landings, scoped to one Spark session.
 
-The dedup family proved the trade at 100 TB scale: land a relation
-bucketed on its family's join/partition key once per corpus snapshot,
-and every downstream pass runs exchange-free
-(operators/dedup.py:land_shingle_relation / shared_shingle_relation —
-markers, fingerprint adoption, staleness reclaim, all r10-r13-hardened).
-This module applies the same machinery to the EVENTS family: every
-user-keyed operator (rolling features, sessionization, TTL dedup,
-funnels, cohorts, ...) shares one plan shape — ONE exchange on the user
-key then key-bounded work — so an events table landed bucketed by the
-user key retires that exchange for the whole family (measured: q177's
-batch face 0.73 -> 0.31 s at sf0.1 with zero exchanges,
-examples/bucketed_events_demo.py; plan-pinned in tests/test_plans.py).
+A landing persists a relation bucketed (and in-bucket sorted) on its
+family's join/partition key, so every later pass over the same corpus
+in the same session runs without shuffling it again. Three families
+land through :func:`_shared_landing`:
 
-The session/adoption flow REUSES dedup.py's hardened helpers (markers
-with writer id + source fingerprint + file census, cross-session
-adoption as an external bucketed table, stale-dir reclaim with a grace
-window, per-session caches with stopped-session eviction, the
-LANDING_EVENTS telemetry) — r15 parametrized the marker's bucket/sort
-spec so adoption reproduces ANY landing's layout, not just the shingle
-relation's ``(g)``. Registry routing (the r11 move for the dedup
-family) is deliberately NOT done here — that is the recorded round-16
-scope; this module lands the capability and its tests.
+- shingle (operators/dedup.py: land_shingle_relation /
+  shared_shingle_relation) — the q35/q35b/q119 self-joins on ``g``;
+- events (this module) — every user-keyed operator (rolling features,
+  sessionization, TTL dedup, funnels, cohorts, ...) shares one plan
+  shape, ONE exchange on the user key then key-bounded work, so events
+  landed bucketed by the user key retire that exchange for the whole
+  family (measured: q177's batch face 0.73 -> 0.31 s at sf0.1 with zero
+  exchanges, examples/bucketed_events_demo.py; plan-pinned in
+  tests/test_plans.py);
+- posting (operators/retrieval.py) — the term-bucketed inverted index.
+
+Lifetime: a landing lives exactly as long as the session that wrote it.
+The table name is a digest of (applicationId, family ident), so two
+live sessions never share a directory, and the table's location is
+registered with Hadoop's ``FileSystem.deleteOnExit``, so its files go
+away when the JVM exits. A repeat call with the same ident in the same
+session returns the landed relation without writing. Nothing written by
+another session is ever read: a JVM killed without running its shutdown
+hooks (SIGKILL) leaves its landing directories behind, named by its
+dead application id, where no later session looks.
 """
 
 from __future__ import annotations
 
+import hashlib
+import time
+
 from pyspark.sql import DataFrame
 
-from franzoxide_spark.operators.dedup import _shared_landing
+# (applicationId, *ident) -> the landed relation handed to consumers.
+# Keyed by applicationId because the default in-memory catalog dies
+# with the session; entries of other (stopped) sessions are evicted on
+# the next call.
+_SESSION_LANDINGS: dict[tuple, DataFrame] = {}
+
+# Bench/driver-visible decision log: every shared landing call appends
+# whether it paid the landing write ("written", with its build seconds
+# and Catalyst stats bytes) or hit the in-session cache
+# ("session-reuse"). bench.py copies it into the detail artifact;
+# entries carry wall-clock epochs so readers can align them with the
+# per-query start offsets. Re-exported as ``dedup.LANDING_EVENTS``.
+LANDING_EVENTS: list[dict] = []
+
+
+def _landing_event(decision: str, name: str, **extra) -> None:
+    if len(LANDING_EVENTS) < 1000:  # bounded — diagnostics, not a log
+        LANDING_EVENTS.append(
+            {"decision": decision, "table": name,
+             "epoch": round(time.time(), 2), **extra}
+        )
+
+
+def _landing_name(name_prefix: str, key: tuple) -> str:
+    """Catalog table name of the landing for ``key`` =
+    ``(applicationId, *ident)`` — the one naming rule."""
+    return name_prefix + hashlib.md5(repr(key).encode()).hexdigest()[:12]
+
+
+def _table_fs_path(spark, name: str):
+    """(fs, path) for the managed-table location of ``name``. Resolved
+    from the CURRENT database's locationUri (for the default database
+    that is the warehouse dir; for any other it is <warehouse>/<db>.db/
+    or wherever the db was created) — a plain <warehouse>/<name> concat
+    would silently miss a non-default database. Hadoop FileSystem API so
+    the path scheme (local/HDFS/S3A) doesn't matter."""
+    db_loc = spark.catalog.getDatabase(
+        spark.catalog.currentDatabase()).locationUri
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(db_loc.rstrip("/") + "/" + name)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, path
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst stats size for the landing telemetry — diagnostics only,
+    so a JVM-side failure must never break the landing path."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:  # noqa: BLE001 — diagnostics must never fail landing
+        return None
+
+
+def _shared_landing(
+    df: DataFrame,
+    *,
+    ident: tuple,
+    name_prefix: str,
+    land_fn,
+) -> DataFrame:
+    """The land-once-per-session flow every family wrapper shares.
+    ``land_fn(df, table_name)`` performs the family-specific bucketed
+    write and returns the re-read relation; ``ident`` identifies the
+    corpus and layout within the session."""
+    spark = df.sparkSession
+    key = (spark.sparkContext.applicationId,) + ident
+    # evict entries from OTHER (stopped) sessions: they hold DataFrames
+    # whose py4j proxies pin the dead session's objects for the process
+    # lifetime — a restart-heavy process (tests, notebooks) would
+    # otherwise grow one dead DataFrame per (session, corpus)
+    for stale in [k for k in _SESSION_LANDINGS if k[0] != key[0]]:
+        del _SESSION_LANDINGS[stale]
+    name = _landing_name(name_prefix, key)
+    if key in _SESSION_LANDINGS and spark.catalog.tableExists(name):
+        _landing_event("session-reuse", name)
+        return _SESSION_LANDINGS[key]
+    t0 = time.monotonic()
+    rel = land_fn(df, name)
+    secs = round(time.monotonic() - t0, 3)
+    fs, path = _table_fs_path(spark, name)
+    fs.deleteOnExit(path)
+    # build wall-clock: bench.py sums these into the printed
+    # landing_build_s, so the one-line artifact states how much
+    # landing-write time the run paid
+    _landing_event(
+        "written", name, stat_bytes=_plan_size_bytes(rel), secs=secs,
+    )
+    _SESSION_LANDINGS[key] = rel
+    return rel
 
 
 def land_events_relation(
@@ -59,8 +154,8 @@ def land_events_relation(
     """
     (
         events
-        # one file per bucket (the landing contract adoption's file
-        # census assumes): repartition on the bucket hash first
+        # one file per bucket: repartition on the bucket hash first, so
+        # each write task holds exactly one bucket's rows
         .repartition(n_buckets, key_col)
         .write.mode(mode)
         .bucketBy(n_buckets, key_col)
@@ -80,188 +175,13 @@ def shared_events_relation(
 ) -> DataFrame:
     """Session-shared events landing: the first call per (session,
     corpus, key, buckets) lands the bucketed table; later calls in the
-    same session reuse it, and a FRESH session finding a marked,
-    fingerprint-matching landing ADOPTS it without rewriting (the
-    shared_shingle_relation contract, same machinery, same telemetry in
-    LANDING_EVENTS). A changed corpus (fingerprint mismatch) reclaims
-    and re-lands with a warning naming the previous writer."""
+    same session reuse it (same telemetry in LANDING_EVENTS as the
+    shingle and posting landings)."""
     return _shared_landing(
         events,
         ident=("events", source_key, key_col, ts_col, n_buckets),
         name_prefix="events_rel_",
-        family="events",
         land_fn=lambda d, name: land_events_relation(
             d, key_col, ts_col, name, n_buckets=n_buckets,
         ),
-        marker_extra={
-            "n_buckets": n_buckets,
-            "bucket_cols": [key_col],
-            "sort_cols": [key_col, ts_col],
-        },
-    )
-
-
-def land_fact_relation(
-    df: DataFrame,
-    key_col: str,
-    out_table: str,
-    *,
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Persist a FACT table bucketed + in-bucket sorted on its join key
-    and return the re-read relation. Both sides of a fact-fact equi-join
-    landed this way (same key family, same bucket count) join with NO
-    Exchange and NO Sort on either side — the 100 TB fact-fact shape
-    measured in examples/bucketed_facts_demo.py (1.4x at 10x growing to
-    3.9x at 30x, BASELINE.md r17). One file per bucket (repartition on
-    the bucket key first) so Spark trusts the sortBy metadata."""
-    (
-        df.repartition(n_buckets, key_col)
-        .write.mode(mode)
-        .bucketBy(n_buckets, key_col)
-        .sortBy(key_col)
-        .saveAsTable(out_table)
-    )
-    return df.sparkSession.table(out_table)
-
-
-def shared_fact_relation(
-    df: DataFrame,
-    key_col: str,
-    source_key: str,
-    *,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Session-shared bucketed fact landing: same write-once /
-    adopt-across-sessions contract as the shingle/events/posting
-    families (markers, fingerprint adoption, stale reclaim, telemetry
-    in LANDING_EVENTS)."""
-    from franzoxide_spark.operators.dedup import _shared_landing
-
-    return _shared_landing(
-        df,
-        ident=("facts", source_key, key_col, n_buckets),
-        name_prefix="fact_rel_",
-        family="facts",
-        land_fn=lambda d, name: land_fact_relation(
-            d, key_col, name, n_buckets=n_buckets,
-        ),
-        marker_extra={
-            "n_buckets": n_buckets,
-            "bucket_cols": [key_col],
-            "sort_cols": [key_col],
-        },
-    )
-
-
-def _path_bytes(path: str) -> int:
-    """Total bytes under ``path`` (file or directory) — the same size
-    signal Spark's planner uses for a parquet scan estimate."""
-    import os
-
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
-def _broadcast_threshold_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (Spark returns
-    the raw conf string: plain bytes, or with a b/k/m/g suffix)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("b", 1)):
-        if raw.endswith(suffix):
-            raw = raw[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return 10 << 20
-
-
-def fact_join_relations(
-    spark,
-    sf_dir: str,
-    left_name: str,
-    right_name: str,
-    left_key: str,
-    right_key: str,
-    left_cols: "list[str] | None" = None,
-    right_cols: "list[str] | None" = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(left, right) relations for a fact-fact equi-join, size-gated
-    (r18, VERDICT r17 item #7 — the co-bucketed landing promoted from
-    demo to a served path):
-
-    - while the SMALLER side still fits the session's broadcast
-      threshold (every bench SF), return the plain pruned parquet scans
-      — the join broadcasts and bucketing buys nothing;
-    - past the threshold (the 10x/30x replica regime and up, where the
-      join pays a full shuffle+sort of BOTH sides), land each side once
-      bucketed + in-bucket sorted on its join key and serve the landed
-      relations: the join runs with no Exchange and no Sort on either
-      side, write-once/join-many with cross-session adoption.
-
-    ``left_cols``/``right_cols``: the columns the consumer's join
-    actually carries. The gate compares the SMALLER side's estimated
-    *pruned* bytes (full bytes scaled by the consumed-column fraction)
-    against the threshold, because that is what AQE sees at runtime: a
-    wide fact whose 2-column projection still fits the threshold gets a
-    runtime broadcast join anyway, and a landing build would be pure
-    cost (measured r18: q139 at the 10x replica — landed 10.5 s vs
-    plain 9.98 s interleaved min-of-4, AQE broadcasting the pruned
-    orders side; the landing's win regime is both sides' JOIN columns
-    past the threshold, the bucketed_facts_demo 30x case at 3.9x).
-
-    ``SPARK_GRAFT_FACTS_LANDING=0`` is the ad-hoc lever (same contract
-    as the other landing families); ``=force`` lands regardless of size
-    (tests / fixture-scale plan audits). Bucket count is scale-adaptive:
-    ~128 MB of the larger side per bucket, clamped to [16, 4096] and
-    rounded to a power of two so replica decades reuse counts
-    (``SPARK_GRAFT_FACTS_BUCKETS`` overrides)."""
-    import os
-
-    from franzoxide_spark.tables import table
-
-    left = table(spark, sf_dir, left_name)
-    right = table(spark, sf_dir, right_name)
-    mode = os.environ.get("SPARK_GRAFT_FACTS_LANDING", "1")
-    if mode == "0":
-        return left, right
-    lb = _path_bytes(os.path.join(sf_dir, f"{left_name}.parquet"))
-    rb = _path_bytes(os.path.join(sf_dir, f"{right_name}.parquet"))
-    lb_pruned = lb * (
-        min(1.0, len(left_cols) / max(len(left.columns), 1))
-        if left_cols else 1.0
-    )
-    rb_pruned = rb * (
-        min(1.0, len(right_cols) / max(len(right.columns), 1))
-        if right_cols else 1.0
-    )
-    if mode != "force" and (
-        min(lb_pruned, rb_pruned) <= _broadcast_threshold_bytes(spark)
-    ):
-        return left, right
-    if os.environ.get("SPARK_GRAFT_FACTS_BUCKETS"):
-        n_buckets = int(os.environ["SPARK_GRAFT_FACTS_BUCKETS"])
-    else:
-        n_buckets = 16
-        while n_buckets * (128 << 20) < max(lb, rb) and n_buckets < 4096:
-            n_buckets *= 2
-    return (
-        shared_fact_relation(left, left_key, sf_dir, n_buckets=n_buckets),
-        shared_fact_relation(right, right_key, sf_dir, n_buckets=n_buckets),
     )

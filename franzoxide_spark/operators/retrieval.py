@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from franzoxide_spark.functions.text import sql_tokens, tokens
+from franzoxide_spark.operators.landing import _shared_landing
 
 
 def _posting_relation(
@@ -109,8 +110,8 @@ def land_posting_relation(
     )
     (
         _posting_relation(docs, id_col, text_col)
-        # one file per bucket (the landing adoption's file census
-        # assumes): repartition on the bucket hash first
+        # one file per bucket: repartition on the bucket hash first, so
+        # each write task holds exactly one bucket's rows
         .repartition(n_buckets, "term")
         # df per term: posting is unique per (id, term), so the row
         # count per term IS the document frequency; the window runs on
@@ -133,30 +134,17 @@ def shared_posting_relation(
     *,
     n_buckets: int = 16,
 ) -> DataFrame:
-    """Session-shared posting landing: first call per (session, corpus)
-    lands the bucketed posting table, later calls reuse it, and a fresh
-    session finding a marked fingerprint-matching landing ADOPTS it —
-    the shared_shingle_relation contract on the retrieval family (one
-    ``_shared_landing`` flow for all families, r15 ADVICE)."""
-    from franzoxide_spark.operators.dedup import _shared_landing
-
+    """Session-shared posting landing: the first call per (session,
+    corpus) lands the bucketed posting table and later calls in the
+    same session reuse it — the shared_shingle_relation contract on the
+    retrieval family (one ``_shared_landing`` flow for all families)."""
     return _shared_landing(
         docs,
-        # "pfdf2" versions the landed schema (postings + baked-in df +
-        # baked-in corpus stats): a schema change bumps the tag -> new
-        # table name, so a stale marker from an old contract can never
-        # be adopted into a query that expects the new columns
-        ident=("posting", "pfdf2", source_key, id_col, text_col, n_buckets),
+        ident=("posting", source_key, id_col, text_col, n_buckets),
         name_prefix="posting_rel_",
-        family="posting",
         land_fn=lambda d, name: land_posting_relation(
             d, id_col, text_col, name, n_buckets=n_buckets,
         ),
-        marker_extra={
-            "n_buckets": n_buckets,
-            "bucket_cols": ["term"],
-            "sort_cols": ["term"],
-        },
     )
 
 

@@ -203,21 +203,8 @@ def q139(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from franzoxide_spark.operators.graph import pagerank
 
-    # Size-gated co-bucketed fact landing (r18, VERDICT #7): while
-    # orders fits the broadcast threshold (every bench SF) these are the
-    # plain pruned scans and the join broadcasts; past it (10x/30x and
-    # up) both sides serve from orderkey-bucketed landings and the
-    # fact-fact join runs with no Exchange/Sort on either side
-    # (plan-pinned in tests/test_plans.py, slope row in BASELINE.md).
-    from franzoxide_spark.operators.landing import fact_join_relations
-
-    li, o = fact_join_relations(
-        spark, sf_dir, "lineitem", "orders", "l_orderkey", "o_orderkey",
-        left_cols=["l_orderkey", "l_suppkey"],
-        right_cols=["o_orderkey", "o_custkey"],
-    )
-    li = li.select("l_orderkey", "l_suppkey")
-    o = o.select("o_orderkey", "o_custkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pairs = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(

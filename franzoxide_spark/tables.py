@@ -200,9 +200,3 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     _FANOUT[key] = fanned
     return fanned
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for the SQL surface)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

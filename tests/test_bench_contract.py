@@ -53,19 +53,20 @@ def test_printed_queries_keep_prev_round_names():
     the PERF comparator published false dropped_from_bench rows). The
     printed map is top-10 UNION the previous round's printed names — and
     the union must still fit the driver's 2000-byte tail capture."""
-    from bench import PREV_PRINTED_QUERIES
+    from bench import prev_printed_queries
 
+    prev = prev_printed_queries()
     timings, oracle = _fake_run(150)
     # every prev-printed name present but FAST — outside the top-10
-    for n in PREV_PRINTED_QUERIES:
+    for n in prev:
         timings[n] = 0.01
         oracle[n] = 0.005
     summary, _ = build_summary(
         timings, oracle, errors={}, floor=0.21, floor_failed=False, sf=0.1
     )
-    for n in PREV_PRINTED_QUERIES:
+    for n in prev:
         assert n in summary["queries"], f"{n} dropped from printed line"
-    assert len(summary["queries"]) <= 10 + len(PREV_PRINTED_QUERIES)
+    assert len(summary["queries"]) <= 10 + len(prev)
     line = json.dumps(summary, separators=(",", ":"))
     assert len(line) < 1800, f"printed line is {len(line)} bytes"
 

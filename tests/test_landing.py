@@ -1,28 +1,32 @@
-"""Family-agnostic landing machinery (operators/landing.py, r15): the
-events-by-user bucketed landing on the dedup family's hardened
-session/marker/adoption flow. Registry routing is the recorded r16
-scope; these tests pin the capability itself."""
+"""Session-scoped landings (operators/landing.py): the events-by-user
+bucketed landing, the posting landing's layout, and the lifetime
+contract — a landing is written once per session, never touches
+another session's directory, and is deleted when its JVM exits."""
 
 from __future__ import annotations
 
 import glob
-import hashlib
-import json
 import os
-import shutil
+import subprocess
+import sys
+import textwrap
+import time
 
-from pyspark.sql import functions as F
-
+from franzoxide_spark.operators.dedup import LANDING_EVENTS
 from franzoxide_spark.operators.landing import (
+    _landing_name,
     land_events_relation,
     shared_events_relation,
 )
 from franzoxide_spark.streaming.stateful import batch_ttl_session_dedup
 from franzoxide_spark.tables import table
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _name(ident) -> str:
-    return "events_rel_" + hashlib.md5(repr(ident).encode()).hexdigest()[:12]
+
+def _warehouse(spark) -> str:
+    return str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix(
+        "file:")
 
 
 def test_shared_events_relation_lands_once_and_retires_the_exchange(
@@ -32,14 +36,12 @@ def test_shared_events_relation_lands_once_and_retires_the_exchange(
     the landed relation feeds q177's batch face with ZERO exchanges and
     the identical relation to the plain path — the whole point of the
     events landing."""
-    from franzoxide_spark.operators.dedup import LANDING_EVENTS
-
     ev = table(spark, sf_dir, "events")
     key = f"{sf_dir}/events#land_once"
-    name = _name(("events", key, "user_id", "ts", 4))
+    n0 = len(LANDING_EVENTS)
+    rel1 = shared_events_relation(ev, "user_id", "ts", key, n_buckets=4)
+    name = LANDING_EVENTS[n0]["table"]
     try:
-        n0 = len(LANDING_EVENTS)
-        rel1 = shared_events_relation(ev, "user_id", "ts", key, n_buckets=4)
         rel2 = shared_events_relation(ev, "user_id", "ts", key, n_buckets=4)
         decisions = [e["decision"] for e in LANDING_EVENTS[n0:]
                      if e["table"] == name]
@@ -60,52 +62,9 @@ def test_shared_events_relation_lands_once_and_retires_the_exchange(
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_shared_events_relation_adopts_fresh_marked_landing(spark, sf_dir):
-    """Cross-session adoption with the r15-parametrized bucket spec: a
-    fresh session finding a marked, fingerprint-matching events landing
-    adopts it as an external table CLUSTERED BY the user key (no
-    re-land — file mtimes untouched), and the adopted relation still
-    retires the exchange."""
-    from franzoxide_spark.operators.dedup import _LANDING_MARKER
-
-    ev = table(spark, sf_dir, "events")
-    key_a = f"{sf_dir}/events#adopt_writer"
-    key_b = f"{sf_dir}/events#adopt_reader"
-    name_a = _name(("events", key_a, "user_id", "ts", 4))
-    name_b = _name(("events", key_b, "user_id", "ts", 4))
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    dir_a, dir_b = os.path.join(wh, name_a), os.path.join(wh, name_b)
-    try:
-        rel_a = shared_events_relation(ev, "user_id", "ts", key_a,
-                                       n_buckets=4)
-        with open(os.path.join(dir_a, _LANDING_MARKER)) as fh:
-            marker = json.load(fh)
-        assert marker["bucket_cols"] == ["user_id"]
-        assert marker["sort_cols"] == ["user_id", "ts"]
-        shutil.copytree(dir_a, dir_b)
-        assert not spark.catalog.tableExists(name_b)
-        before = {p: os.path.getmtime(p)
-                  for p in glob.glob(dir_b + "/*.parquet")}
-        rel_b = shared_events_relation(ev, "user_id", "ts", key_b,
-                                       n_buckets=4)
-        after = {p: os.path.getmtime(p)
-                 for p in glob.glob(dir_b + "/*.parquet")}
-        assert after == before, "adoption re-landed instead of reusing"
-        assert rel_b.count() == rel_a.count()
-        out = batch_ttl_session_dedup(rel_b, "user_id", "event_type",
-                                      "ts", 3600)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange hashpartitioning") == 0, plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name_a}")
-        spark.sql(f"DROP TABLE IF EXISTS {name_b}")
-        for d in (dir_a, dir_b):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def test_land_events_relation_layout_and_neutrality(spark, sf_dir):
     """The landing is semantically neutral (same rows, same schema) and
-    writes one file per bucket (the adoption census contract)."""
+    writes one file per bucket."""
     ev = table(spark, sf_dir, "events")
     try:
         rel = land_events_relation(ev, "user_id", "ts",
@@ -113,9 +72,8 @@ def test_land_events_relation_layout_and_neutrality(spark, sf_dir):
         assert rel.columns == ev.columns
         assert rel.exceptAll(ev).count() == 0
         assert ev.exceptAll(rel).count() == 0
-        wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix(
-            "file:")
-        files = glob.glob(os.path.join(wh, "ev_layout_test", "*.parquet"))
+        files = glob.glob(
+            os.path.join(_warehouse(spark), "ev_layout_test", "*.parquet"))
         assert len(files) == 4, files
     finally:
         spark.sql("DROP TABLE IF EXISTS ev_layout_test")
@@ -180,27 +138,20 @@ def test_shared_posting_relation_lands_once_with_index_metadata(
 ):
     """Third family on _shared_landing (r16): first call writes the
     term-bucketed posting table with df AND corpus stats baked in,
-    second call session-reuses; the marker carries the term bucket/sort
-    spec (what adoption replays) and the baked columns equal what the
-    ad-hoc build + stats pass would compute."""
+    second call session-reuses; the catalog records the term bucket/sort
+    layout and the baked columns equal what the ad-hoc build + stats
+    pass would compute."""
     import pyspark.sql.functions as F
 
-    from franzoxide_spark.operators.dedup import (
-        LANDING_EVENTS,
-        _LANDING_MARKER,
-    )
     from franzoxide_spark.operators.retrieval import shared_posting_relation
     from franzoxide_spark.functions.text import tokens
 
     docs = table(spark, sf_dir, "documents")
     key = f"{sf_dir}/documents#posting_land_once"
-    name = "posting_rel_" + hashlib.md5(
-        repr(("posting", "pfdf2", key, "doc_id", "text", 4)).encode()
-    ).hexdigest()[:12]
+    n0 = len(LANDING_EVENTS)
+    rel1 = shared_posting_relation(docs, "doc_id", "text", key, n_buckets=4)
+    name = LANDING_EVENTS[n0]["table"]
     try:
-        n0 = len(LANDING_EVENTS)
-        rel1 = shared_posting_relation(docs, "doc_id", "text", key,
-                                       n_buckets=4)
         rel2 = shared_posting_relation(docs, "doc_id", "text", key,
                                        n_buckets=4)
         decisions = [e["decision"] for e in LANDING_EVENTS[n0:]
@@ -208,13 +159,14 @@ def test_shared_posting_relation_lands_once_with_index_metadata(
         assert decisions == ["written", "session-reuse"], decisions
         assert set(rel1.columns) == {
             "doc_id", "term", "tf", "dl", "df", "n_docs", "avgdl"}
-        # marker records the term bucket/sort layout for adoption
-        wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix(
-            "file:")
-        with open(os.path.join(wh, name, _LANDING_MARKER)) as fh:
-            marker = json.load(fh)
-        assert marker["bucket_cols"] == ["term"]
-        assert marker["sort_cols"] == ["term"]
+        # the catalog records the term bucket/sort layout
+        layout = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        }
+        assert layout["Num Buckets"] == "4", layout
+        assert layout["Bucket Columns"] == "[`term`]", layout
+        assert layout["Sort Columns"] == "[`term`]", layout
         # baked df: rows per term == document frequency
         bad_df = (
             rel1.groupBy("term", "df").agg(F.count("*").alias("n"))
@@ -233,3 +185,82 @@ def test_shared_posting_relation_lands_once_with_index_metadata(
         assert abs(baked[0]["avgdl"] - live["avgdl"]) < 1e-9
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_landing_is_deleted_when_its_session_exits(tmp_path, sf_dir):
+    """The lifetime contract: a child process lands an events relation
+    into its own warehouse and exits without dropping the table; the
+    landing directory must then be gone — deleteOnExit ran in the
+    child's JVM shutdown."""
+    warehouse = tmp_path / "warehouse"
+    child = textwrap.dedent(f"""
+        from franzoxide_spark.operators.dedup import LANDING_EVENTS
+        from franzoxide_spark.operators.landing import shared_events_relation
+        from franzoxide_spark.session import get_spark
+        from franzoxide_spark.tables import table
+
+        spark = get_spark(
+            app_name="landing_lifetime_child", master="local[1]",
+            driver_memory="1g",
+            extra_conf={{"spark.sql.warehouse.dir": {str(warehouse)!r}}},
+        )
+        ev = table(spark, {sf_dir!r}, "events")
+        shared_events_relation(ev, "user_id", "ts", "lifetime", n_buckets=2)
+        print("LANDED", LANDING_EVENTS[-1]["table"], flush=True)
+    """)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    out = subprocess.run(
+        [sys.executable, "-c", child], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    (line,) = [ln for ln in out.stdout.splitlines()
+               if ln.startswith("LANDED ")]
+    land_dir = warehouse / line.split()[1]
+    deadline = time.monotonic() + 30
+    while land_dir.exists() and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not land_dir.exists(), f"{land_dir} outlived its session"
+
+
+def test_landing_ignores_other_sessions_directories(spark, sf_dir):
+    """Directories at another session's landing name, or at the
+    pre-session-scoped deterministic name (no applicationId in the
+    digest), neither block this session's landing nor get touched."""
+    ident = ("events", f"{sf_dir}/events#foreign", "user_id", "ts", 2)
+    wh = _warehouse(spark)
+    foreign = [
+        os.path.join(wh, _landing_name("events_rel_",
+                                       ("local-1000000000000",) + ident)),
+        os.path.join(wh, _landing_name("events_rel_", ident)),
+    ]
+    planted = []
+    for d in foreign:
+        os.makedirs(d, exist_ok=True)
+        part = os.path.join(d, "part-00000-foreign.parquet")
+        with open(part, "wb") as f:
+            f.write(b"another session's bytes")
+        old = time.time() - 7200
+        os.utime(part, (old, old))
+        planted.append(part)
+    n0 = len(LANDING_EVENTS)
+    ev = table(spark, sf_dir, "events")
+    try:
+        rel = shared_events_relation(ev, ident[2], ident[3], ident[1],
+                                     n_buckets=2)
+        (event,) = LANDING_EVENTS[n0:]
+        assert event["decision"] == "written", event
+        assert os.path.join(wh, event["table"]) not in foreign
+        assert rel.count() == ev.count()
+        for d, part in zip(foreign, planted):
+            assert sorted(os.listdir(d)) == [os.path.basename(part)], d
+            with open(part, "rb") as f:
+                assert f.read() == b"another session's bytes"
+            assert os.path.getmtime(part) < time.time() - 3600
+    finally:
+        if len(LANDING_EVENTS) > n0:
+            spark.sql(f"DROP TABLE IF EXISTS {LANDING_EVENTS[n0]['table']}")
+        for d in foreign:
+            for f in glob.glob(os.path.join(d, "*")):
+                os.remove(f)
+            os.rmdir(d)

@@ -728,6 +728,7 @@ def test_shared_shingle_relation_lands_once_per_session(spark, sf_dir):
     import pytest as _pytest
 
     from franzoxide_spark.operators.dedup import (
+        LANDING_EVENTS,
         jaccard_pairs_prefix,
         shared_shingle_relation,
     )
@@ -735,13 +736,13 @@ def test_shared_shingle_relation_lands_once_per_session(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     key = f"{sf_dir}/documents#test_shared_once"
+    n0 = len(LANDING_EVENTS)
     rel1 = shared_shingle_relation(
         docs, "text", "doc_id", source_key=key, n_buckets=8
     )
-    import hashlib as _hashlib
-
-    ident = (key, "text", "doc_id", 3, 8)
-    tbl = "shingle_rel_" + _hashlib.md5(repr(ident).encode()).hexdigest()[:12]
+    (written,) = LANDING_EVENTS[n0:]
+    assert written["decision"] == "written", written
+    tbl = written["table"]
     assert spark.catalog.tableExists(tbl), "landing did not create the table"
     wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
     land_dir = _os.path.join(wh, tbl)
@@ -769,363 +770,6 @@ def test_shared_shingle_relation_lands_once_per_session(spark, sf_dir):
             )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def test_shared_shingle_relation_recovers_stale_warehouse_dir(spark, sf_dir):
-    """A previous session's COMPLETED landing (marker present) leaves
-    files in the warehouse that the (in-memory) catalog has forgotten;
-    saveAsTable would then fail LOCATION_ALREADY_EXISTS. The shared
-    landing must clear the marked orphan and land cleanly — simulated by
-    planting a marked stale directory at the exact digest-derived
-    location before the call."""
-    import hashlib as _hashlib
-    import os as _os
-
-    from franzoxide_spark.operators.dedup import (
-        _LANDING_MARKER,
-        shared_shingle_relation,
-    )
-    from franzoxide_spark.tables import table
-
-    key = f"{sf_dir}/documents#test_stale_recovery"
-    ident = (key, "text", "doc_id", 3, 8)
-    name = "shingle_rel_" + _hashlib.md5(
-        repr(ident).encode()).hexdigest()[:12]
-    assert not spark.catalog.tableExists(name)
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    stale = _os.path.join(wh, name)
-    _os.makedirs(stale, exist_ok=True)
-    with open(_os.path.join(stale, "part-orphan.parquet"), "wb") as f:
-        f.write(b"stale")
-    with open(_os.path.join(stale, _LANDING_MARKER), "wb"):
-        pass
-    try:
-        rel = shared_shingle_relation(
-            table(spark, sf_dir, "documents"), "text", "doc_id",
-            source_key=key, n_buckets=8,
-        )
-        assert rel.count() > 0
-        assert not _os.path.exists(_os.path.join(stale, "part-orphan.parquet"))
-        # the fresh landing re-marked itself complete
-        assert _os.path.exists(_os.path.join(stale, _LANDING_MARKER))
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_shared_shingle_relation_adopts_fresh_marked_landing(spark, sf_dir):
-    """Cross-session adoption (r12 ADVICE #4): a fresh session finding a
-    MARKED completed landing whose source fingerprint still matches the
-    corpus must ADOPT it — external bucketed declaration over the
-    existing files, no re-land, k-stamp restored, self-join still
-    exchange-free — instead of deleting files a live sibling session may
-    be scanning. Simulated in-process by copying a completed landing to
-    the digest location of a second source_key (same corpus, so the
-    fingerprint in the copied marker still matches)."""
-    import glob as _glob
-    import hashlib as _hashlib
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from pyspark.sql import functions as F
-
-    from franzoxide_spark.operators.dedup import (
-        _LANDING_MARKER,
-        jaccard_pairs,
-        shared_shingle_relation,
-    )
-    from franzoxide_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents").limit(500)
-    key_a = f"{sf_dir}/documents#adopt_writer"
-    key_b = f"{sf_dir}/documents#adopt_reader"
-
-    def _name(k):
-        ident = (k, "text", "doc_id", 3, 8)
-        return "shingle_rel_" + _hashlib.md5(
-            repr(ident).encode()).hexdigest()[:12]
-
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    name_a, name_b = _name(key_a), _name(key_b)
-    dir_a, dir_b = _os.path.join(wh, name_a), _os.path.join(wh, name_b)
-    try:
-        rel_a = shared_shingle_relation(
-            docs, "text", "doc_id", source_key=key_a, n_buckets=8
-        )
-        want = sorted(map(tuple, rel_a.collect()))
-        # the marker carries writer identity + schema + fingerprint
-        with open(_os.path.join(dir_a, _LANDING_MARKER)) as fh:
-            marker = _json.load(fh)
-        assert marker["app_id"] == spark.sparkContext.applicationId
-        assert marker["fingerprint"] and marker["n_buckets"] == 8
-        # simulate a dead session's completed landing for key_b
-        _shutil.copytree(dir_a, dir_b)
-        assert not spark.catalog.tableExists(name_b)
-        before = {
-            p: _os.path.getmtime(p)
-            for p in _glob.glob(dir_b + "/*.parquet")
-        }
-        rel_b = shared_shingle_relation(
-            docs, "text", "doc_id", source_key=key_b, n_buckets=8
-        )
-        after = {
-            p: _os.path.getmtime(p)
-            for p in _glob.glob(dir_b + "/*.parquet")
-        }
-        assert after == before, "adoption re-landed instead of reusing"
-        # k-stamp restored through the external declaration
-        assert rel_b.schema["g"].metadata.get("shingle_k") == 3
-        assert sorted(map(tuple, rel_b.collect())) == want
-        # the adopted relation keeps the exchange-free self-join property
-        j = rel_b.alias("a").hint("merge").join(rel_b.alias("b"), "g")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # and consumers accept it (k check passes) with identical output
-        pa = sorted(map(tuple, jaccard_pairs(
-            docs, "text", "doc_id", 0.5, shingle_rel=rel_a).collect()))
-        pb = sorted(map(tuple, jaccard_pairs(
-            docs, "text", "doc_id", 0.5, shingle_rel=rel_b).collect()))
-        assert pa == pb
-        # repeat call returns the SAME stamped relation (session cache)
-        rel_b2 = shared_shingle_relation(
-            docs, "text", "doc_id", source_key=key_b, n_buckets=8
-        )
-        assert rel_b2.schema["g"].metadata.get("shingle_k") == 3
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name_a}")
-        spark.sql(f"DROP TABLE IF EXISTS {name_b}")
-        for d in (dir_a, dir_b):
-            _shutil.rmtree(d, ignore_errors=True)
-
-
-def test_shared_shingle_relation_relands_on_fingerprint_mismatch(
-    spark, sf_dir, caplog
-):
-    """A marked landing whose source fingerprint no longer matches the
-    corpus is stale for every reader: it must be reclaimed and re-landed
-    (not adopted), with a warning naming the recorded writer."""
-    import glob as _glob
-    import hashlib as _hashlib
-    import json as _json
-    import logging as _logging
-    import os as _os
-    import shutil as _shutil
-
-    from franzoxide_spark.operators.dedup import (
-        _LANDING_MARKER,
-        shared_shingle_relation,
-    )
-    from franzoxide_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents").limit(500)
-    key_a = f"{sf_dir}/documents#stale_writer"
-    key_b = f"{sf_dir}/documents#stale_reader"
-
-    def _name(k):
-        ident = (k, "text", "doc_id", 3, 8)
-        return "shingle_rel_" + _hashlib.md5(
-            repr(ident).encode()).hexdigest()[:12]
-
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    name_a, name_b = _name(key_a), _name(key_b)
-    dir_a, dir_b = _os.path.join(wh, name_a), _os.path.join(wh, name_b)
-    try:
-        shared_shingle_relation(
-            docs, "text", "doc_id", source_key=key_a, n_buckets=8
-        )
-        _shutil.copytree(dir_a, dir_b)
-        mpath = _os.path.join(dir_b, _LANDING_MARKER)
-        with open(mpath) as fh:
-            marker = _json.load(fh)
-        marker["fingerprint"] = "0" * 32  # the corpus "changed"
-        marker["app_id"] = "app-now-dead-123"
-        with open(mpath, "w") as fh:
-            _json.dump(marker, fh)
-        # drop Hadoop LocalFileSystem's CRC sidecar — the out-of-band
-        # rewrite above invalidates it and the marker read must see the
-        # new fingerprint, not a ChecksumException
-        crc = _os.path.join(dir_b, "." + _LANDING_MARKER + ".crc")
-        if _os.path.exists(crc):
-            _os.remove(crc)
-        before = set(_glob.glob(dir_b + "/*.parquet"))
-        with caplog.at_level(_logging.WARNING,
-                             logger="franzoxide_spark.operators.dedup"):
-            rel_b = shared_shingle_relation(
-                docs, "text", "doc_id", source_key=key_b, n_buckets=8
-            )
-        assert rel_b.count() > 0
-        assert any("app-now-dead-123" in r.message for r in caplog.records)
-        after = set(_glob.glob(dir_b + "/*.parquet"))
-        assert after != before or {
-            p: _os.path.getmtime(p) for p in after
-        } != {p: _os.path.getmtime(p) for p in before}, "stale dir reused"
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name_a}")
-        spark.sql(f"DROP TABLE IF EXISTS {name_b}")
-        for d in (dir_a, dir_b):
-            _shutil.rmtree(d, ignore_errors=True)
-
-
-def test_shared_shingle_relation_relands_on_plan_mismatch(spark, sf_dir):
-    """File stats alone cannot tell ``docs`` from ``docs.limit(500)`` —
-    ``inputFiles()`` lists the same parquet parts for both (r13 review).
-    A landing built from a row SUBSET must NOT be adopted by a caller
-    passing a different frame under the same source_key: the fingerprint
-    folds in the canonicalized plan, so the mismatched caller re-lands
-    from its own frame and gets the full row set."""
-    import glob as _glob
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-
-    from franzoxide_spark.operators.dedup import shared_shingle_relation
-    from franzoxide_spark.tables import table
-
-    full = table(spark, sf_dir, "documents")
-    subset = full.limit(200)
-    key_a = f"{sf_dir}/documents#plan_writer"
-    key_b = f"{sf_dir}/documents#plan_reader"
-
-    def _name(k):
-        ident = (k, "text", "doc_id", 3, 8)
-        return "shingle_rel_" + _hashlib.md5(
-            repr(ident).encode()).hexdigest()[:12]
-
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    name_a, name_b = _name(key_a), _name(key_b)
-    dir_a, dir_b = _os.path.join(wh, name_a), _os.path.join(wh, name_b)
-    try:
-        rel_a = shared_shingle_relation(
-            subset, "text", "doc_id", source_key=key_a, n_buckets=8
-        )
-        subset_rows = rel_a.count()
-        # simulate a dead session's completed SUBSET landing under B's key
-        _shutil.copytree(dir_a, dir_b)
-        rel_b = shared_shingle_relation(
-            full, "text", "doc_id", source_key=key_b, n_buckets=8
-        )
-        # adopted-short would return subset_rows; a correct re-land from
-        # the caller's OWN frame returns the full corpus' shingles
-        assert rel_b.count() > subset_rows
-        # and the mtimes prove a re-land actually happened
-        assert _glob.glob(dir_b + "/part-*.parquet"), "no landing written"
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name_a}")
-        spark.sql(f"DROP TABLE IF EXISTS {name_b}")
-        for d in (dir_a, dir_b):
-            _shutil.rmtree(d, ignore_errors=True)
-
-
-def test_shared_shingle_relation_relands_on_file_census_mismatch(
-    spark, sf_dir, caplog
-):
-    """A MARKED landing that has since LOST a data file (crashed cleanup,
-    manual tampering) is not the landing the marker vouches for: adopting
-    it would register a silently-short bucketed table whose missing rows
-    surface as wrong dedup scores, not errors. The census recorded in the
-    marker must make adoption DECLINE and the caller re-land."""
-    import glob as _glob
-    import hashlib as _hashlib
-    import logging as _logging
-    import os as _os
-    import shutil as _shutil
-
-    from franzoxide_spark.operators.dedup import shared_shingle_relation
-    from franzoxide_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents").limit(500)
-    key_a = f"{sf_dir}/documents#census_writer"
-    key_b = f"{sf_dir}/documents#census_reader"
-
-    def _name(k):
-        ident = (k, "text", "doc_id", 3, 8)
-        return "shingle_rel_" + _hashlib.md5(
-            repr(ident).encode()).hexdigest()[:12]
-
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    name_a, name_b = _name(key_a), _name(key_b)
-    dir_a, dir_b = _os.path.join(wh, name_a), _os.path.join(wh, name_b)
-    try:
-        rel_a = shared_shingle_relation(
-            docs, "text", "doc_id", source_key=key_a, n_buckets=8
-        )
-        want_rows = rel_a.count()
-        _shutil.copytree(dir_a, dir_b)
-        # damage the copy: drop one bucket file (+ its CRC shadow)
-        victim = sorted(_glob.glob(dir_b + "/part-*.parquet"))[0]
-        _os.remove(victim)
-        crc = _os.path.join(
-            _os.path.dirname(victim), "." + _os.path.basename(victim) + ".crc"
-        )
-        if _os.path.exists(crc):
-            _os.remove(crc)
-        with caplog.at_level(_logging.WARNING,
-                             logger="franzoxide_spark.operators.dedup"):
-            rel_b = shared_shingle_relation(
-                docs, "text", "doc_id", source_key=key_b, n_buckets=8
-            )
-        assert any("file census" in r.message for r in caplog.records)
-        # re-landed, not adopted-short: the full row set is back
-        assert rel_b.count() == want_rows
-        assert len(_glob.glob(dir_b + "/part-*.parquet")) == 8
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name_a}")
-        spark.sql(f"DROP TABLE IF EXISTS {name_b}")
-        for d in (dir_a, dir_b):
-            _shutil.rmtree(d, ignore_errors=True)
-
-
-def test_landing_guard_refuses_unmarked_fresh_dir_reclaims_old(spark):
-    """The concurrent-writer guard (r11 ADVICE): an UNMARKED landing dir
-    modified inside the grace window may be another live session
-    mid-write — `_clear_stale_table_location` must raise loudly, not
-    silently delete its files. Past the grace window the same dir is a
-    crashed writer's debris and IS reclaimed, so a crash cannot
-    permanently wedge the corpus."""
-    import os as _os
-    import time as _time
-
-    import pytest as _pytest
-
-    from franzoxide_spark.operators.dedup import _clear_stale_table_location
-
-    name = "shingle_rel_guardtest000"
-    wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    loc = _os.path.join(wh, name)
-    _os.makedirs(loc, exist_ok=True)
-    part = _os.path.join(loc, "part-inprogress.parquet")
-    with open(part, "wb") as f:
-        f.write(b"mid-write")
-    try:
-        # fresh + unmarked -> possibly live writer -> loud refusal
-        with _pytest.raises(RuntimeError, match="another session"):
-            _clear_stale_table_location(spark, name)
-        assert _os.path.exists(part), "guard deleted a fresh unmarked dir"
-        # liveness is judged RECURSIVELY (r12 review): a live saveAsTable
-        # writes under _temporary/ without bumping top-level mtimes, so
-        # an old-looking dir with a FRESH nested attempt file is still a
-        # live writer -> must refuse
-        old = _time.time() - 7200
-        attempt = _os.path.join(loc, "_temporary", "0", "attempt_0")
-        _os.makedirs(attempt, exist_ok=True)
-        fresh_part = _os.path.join(attempt, "part-00000")
-        with open(fresh_part, "wb") as f:
-            f.write(b"live task output")
-        for p in (loc, part, _os.path.dirname(attempt),
-                  _os.path.dirname(_os.path.dirname(attempt))):
-            _os.utime(p, (old, old))
-        with _pytest.raises(RuntimeError, match="another session"):
-            _clear_stale_table_location(spark, name)
-        # age the nested file too -> crashed-writer reclaim
-        _os.utime(attempt, (old, old))
-        _os.utime(fresh_part, (old, old))
-        _clear_stale_table_location(spark, name)
-        assert not _os.path.exists(loc)
-    finally:
-        if _os.path.exists(loc):
-            import shutil as _shutil
-
-            _shutil.rmtree(loc, ignore_errors=True)
 
 
 def test_landing_max_df_strip_bounds_the_largest_bucket(spark):
@@ -1265,8 +909,8 @@ def test_compact_output_preserves_null_partition_rows(spark, tmp_path):
 def test_plan_size_bytes_never_raises(spark):
     """r14 ADVICE: the landing telemetry's Catalyst-stats read is
     diagnostics-only — a JVM-side failure must yield None, never break
-    the adopt/land product path."""
-    from franzoxide_spark.operators.dedup import _plan_size_bytes
+    the landing path."""
+    from franzoxide_spark.operators.landing import _plan_size_bytes
 
     df = spark.range(10)
     n = _plan_size_bytes(df)
@@ -1416,56 +1060,3 @@ def test_q156_is_one_pass_join_free(spark, sf_dir):
     # partial + final of the ONE aggregation, nothing per-arm
     assert plan.count("HashAggregate (") <= 2, plan
     assert "Union" not in plan, plan
-
-
-def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
-    """r18 (VERDICT r17 #7): the co-bucketed fact-fact landing is a
-    SERVED path — fact_join_relations routes a too-big-to-broadcast
-    orderkey join through orderkey-bucketed landings, and the join plan
-    carries no Exchange and no Sort above either scan. Forced on at
-    fixture scale (the size gate keeps bench SFs on the plain
-    broadcast-join scans); rows must be identical to the plain scans."""
-    from franzoxide_spark.operators.landing import fact_join_relations
-
-    monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "force")
-    monkeypatch.setenv("SPARK_GRAFT_FACTS_BUCKETS", "4")
-    li, o = fact_join_relations(
-        spark, sf_dir, "lineitem", "orders", "l_orderkey", "o_orderkey"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = li.select("l_orderkey", "l_suppkey").join(
-            o.select("o_orderkey", "o_custkey"),
-            li["l_orderkey"] == o["o_orderkey"],
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        # identity vs the ungated plain scans
-        monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "0")
-        pli, po = fact_join_relations(
-            spark, sf_dir, "lineitem", "orders", "l_orderkey", "o_orderkey"
-        )
-        pj = pli.select("l_orderkey", "l_suppkey").join(
-            po.select("o_orderkey", "o_custkey"),
-            pli["l_orderkey"] == po["o_orderkey"],
-        )
-        assert j.count() == pj.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_fact_landing_size_gate_stays_off_at_fixture_scale(spark, sf_dir):
-    """At bench SFs the smaller side broadcasts, so the gate must serve
-    the PLAIN scans (no landing write in the bench path) — the
-    scale-adaptive posture the round brief requires of landing routes."""
-    from franzoxide_spark.operators.landing import fact_join_relations
-
-    li, o = fact_join_relations(
-        spark, sf_dir, "lineitem", "orders", "l_orderkey", "o_orderkey"
-    )
-    # plain parquet scans, not catalog tables
-    for df in (li, o):
-        plan = df._jdf.queryExecution().logical().toString()
-        assert "fact_rel_" not in plan, plan
