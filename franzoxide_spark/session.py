@@ -9,6 +9,16 @@ Single place that encodes the engine's execution-model defaults:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   are reproducible across clusters.
 - Arrow enabled: every pandas-UDF boundary is Arrow-batched.
+- Python workers fork from ``worker_daemon``. Each PySpark task calls
+  ``importlib.invalidate_caches()``, and on Python < 3.13 that re-reads the
+  whole directory of ``pyspark.zip`` once per cached zipimporter: a
+  profiled trivial task took 0.589 s, 0.588 s of it there. The daemon
+  re-reads an archive only when its stat changes. On 3.13 and later the
+  invalidation is lazy and the daemon changes nothing. Its package
+  directory is prepended to ``spark.executorEnv.PYTHONPATH`` so workers can
+  import it whatever the driver's cwd. On a cluster whose executors cannot
+  import this package, pass ``spark.python.daemon.module=pyspark.daemon``
+  in ``extra_conf``; a caller's value is kept.
 """
 
 from __future__ import annotations
@@ -18,6 +28,19 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the directory this package was imported from, for the Python workers
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def with_worker_conf(extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """``extra_conf`` plus the Python worker settings: ``worker_daemon`` as
+    the daemon module unless the caller names one, and this package's
+    directory first on the workers' PYTHONPATH."""
+    conf = {"spark.python.daemon.module": "franzoxide_spark.worker_daemon", **(extra_conf or {})}
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    return conf
 
 
 def get_spark(
@@ -61,7 +84,7 @@ def get_spark(
         # this conf is a harmless no-op).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in with_worker_conf(extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
