@@ -34,11 +34,7 @@ import time
 
 from pyspark.sql import DataFrame
 
-# (applicationId, *ident) -> the landed relation handed to consumers.
-# Keyed by applicationId because the default in-memory catalog dies
-# with the session; entries of other (stopped) sessions are evicted on
-# the next call.
-_SESSION_LANDINGS: dict[tuple, DataFrame] = {}
+from franzoxide_spark import session_cache
 
 # Bench/driver-visible decision log: every shared landing call appends
 # whether it paid the landing write ("written", with its build seconds
@@ -101,17 +97,16 @@ def _shared_landing(
     write and returns the re-read relation; ``ident`` identifies the
     corpus and layout within the session."""
     spark = df.sparkSession
-    key = (spark.sparkContext.applicationId,) + ident
-    # evict entries from OTHER (stopped) sessions: they hold DataFrames
-    # whose py4j proxies pin the dead session's objects for the process
-    # lifetime — a restart-heavy process (tests, notebooks) would
-    # otherwise grow one dead DataFrame per (session, corpus)
-    for stale in [k for k in _SESSION_LANDINGS if k[0] != key[0]]:
-        del _SESSION_LANDINGS[stale]
-    name = _landing_name(name_prefix, key)
-    if key in _SESSION_LANDINGS and spark.catalog.tableExists(name):
+    name = _landing_name(
+        name_prefix, (spark.sparkContext.applicationId,) + ident
+    )
+    # the landed relation handed to consumers lives for the application,
+    # see session_cache (the default in-memory catalog dies with it too)
+    key = ("landing.relation",) + ident
+    landed = session_cache.get(spark, key)
+    if landed is not None and spark.catalog.tableExists(name):
         _landing_event("session-reuse", name)
-        return _SESSION_LANDINGS[key]
+        return landed
     t0 = time.monotonic()
     rel = land_fn(df, name)
     secs = round(time.monotonic() - t0, 3)
@@ -123,7 +118,7 @@ def _shared_landing(
     _landing_event(
         "written", name, stat_bytes=_plan_size_bytes(rel), secs=secs,
     )
-    _SESSION_LANDINGS[key] = rel
+    session_cache.put(spark, key, rel)
     return rel
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from franzoxide_spark import session_cache
 from franzoxide_spark.functions.vectors import cosine_rounded
 
 
@@ -221,34 +222,17 @@ def with_lsh_signature(
     return emb.withColumn("lsh_sig", F.expr(_signature_expr(vec_col, bits, dim)))
 
 
-# Built IVF indexes, keyed by (spark app id, caller key, n_lists, seed):
-# the expensive part of IVF is the one-time build (centroid fit + corpus
-# assignment), which must amortize across query batches instead of being
-# re-run per query. Entries hold (centers_df, assigned) with `assigned`
-# persisted. Hygiene: entries from other applications are evicted (and
-# unpersisted) on every build — a stopped application's persisted frames
-# would otherwise pin executor storage for the process lifetime — and the
-# build is serialized under a lock so two concurrent callers cannot both
-# fit KMeans for the same key.
+# Built IVF indexes, keyed by (caller key, n_lists, seed): the expensive
+# part of IVF is the one-time build (centroid fit + corpus assignment),
+# which must amortize across query batches instead of being re-run per
+# query. Entries hold (centers_df, assigned) with `assigned` persisted,
+# and live for the application, see session_cache: a stopped
+# application's persisted blocks went with its SparkContext. The build
+# is serialized under a lock so two concurrent callers cannot both fit
+# KMeans for the same key.
 import threading as _threading
 
-_IVF_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 _IVF_BUILD_LOCK = _threading.Lock()
-
-
-def _evict_stale_ivf_entries(current_app_id: str) -> None:
-    """Drop (and unpersist) cache entries belonging to other applications.
-
-    Called with the build lock held. Unpersist is best-effort: a frame
-    bound to an already-stopped SparkContext raises on unpersist, but the
-    entry must still be dropped so the dict cannot grow across sequential
-    test sessions in one process."""
-    for key in [k for k in _IVF_INDEX_CACHE if k[0] != current_app_id]:
-        _, assigned = _IVF_INDEX_CACHE.pop(key)
-        try:
-            assigned.unpersist()
-        except Exception:
-            pass
 
 
 def build_ivf_index(
@@ -304,19 +288,17 @@ def build_ivf_index(
     if cache_key is None:
         return _build()
 
-    app_id = spark.sparkContext.applicationId
-    full_key = (app_id, cache_key, n_lists, seed)
+    full_key = ("similarity.ivf", cache_key, n_lists, seed)
     # Double-build guard: check-and-build under one lock, so two concurrent
     # callers cannot both fit KMeans (the second would leak a persisted
     # duplicate of `assigned` when its entry is overwritten).
     with _IVF_BUILD_LOCK:
-        _evict_stale_ivf_entries(app_id)
-        hit = _IVF_INDEX_CACHE.get(full_key)
+        hit = session_cache.get(spark, full_key)
         if hit is not None:
             return hit
         centers_df, assigned = _build()
         assigned = assigned.persist()
-        _IVF_INDEX_CACHE[full_key] = (centers_df, assigned)
+        session_cache.put(spark, full_key, (centers_df, assigned))
         return centers_df, assigned
 
 

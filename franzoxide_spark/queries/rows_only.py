@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from franzoxide_spark import session_cache
 from franzoxide_spark.queries import register
 from franzoxide_spark.queries.llm import q53
 from franzoxide_spark.queries.relational import q10b
@@ -74,25 +75,19 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate_stream(pool, hashes).select("doc_id")
 
 
-# static per (session, corpus): the eval suite's hash closure is the
-# constant side of decontamination — collecting it once per session
-# mirrors how a production gate holds it resident (tables._CATALOG's
-# appId keying, so a new session re-collects)
-_Q56_EVAL_CACHE: dict[tuple[str, str], set] = {}
-
-
 def _q56_eval_hashes(spark: SparkSession, sf_dir: str) -> set:
+    """The eval suite's hash closure, the constant side of
+    decontamination: collected once and held resident, as a production
+    gate holds it. It lives for the application, see session_cache."""
     from franzoxide_spark.operators.curation import eval_shingle_hashes
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _Q56_EVAL_CACHE:
-        for stale in [k for k in _Q56_EVAL_CACHE if k[0] != key[0]]:
-            _Q56_EVAL_CACHE.pop(stale, None)
+    key = ("rows_only.q56_eval", sf_dir)
+    hashes = session_cache.get(spark, key)
+    if hashes is None:
         docs = table(spark, sf_dir, "documents")
-        _Q56_EVAL_CACHE[key] = eval_shingle_hashes(
-            docs.filter(F.col("doc_id") % 97 == 0)
-        )
-    return _Q56_EVAL_CACHE[key]
+        hashes = eval_shingle_hashes(docs.filter(F.col("doc_id") % 97 == 0))
+        session_cache.put(spark, key, hashes)
+    return hashes
 
 
 def q69(spark: SparkSession, sf_dir: str) -> DataFrame:

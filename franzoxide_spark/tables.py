@@ -8,9 +8,9 @@ pushdown rather than pre-filtering.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from franzoxide_spark import session_cache
 
 TABLES = (
     "region",
@@ -30,16 +30,8 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
-# DataFrame catalog cache: re-reading the same parquet path re-lists files
-# and re-reads footers on the driver (~100-200 ms per table). A catalog
-# caches that metadata; keyed by session so a new SparkSession re-resolves.
-# Keyed on applicationId, NOT id(spark): a GC'd-then-reallocated session
-# object can reuse the same id() and would alias a stale entry (and stale
-# DataFrames bound to a stopped SparkContext raise on use).
-_CATALOG: dict[tuple[str, str, str], DataFrame] = {}
-
-# Correctness-critical runtime confs, re-asserted per session: query
-# callables may be invoked with a session the caller built (e.g. the
+# Correctness-critical runtime confs, asserted once per JVM session:
+# query callables may be invoked with a session the caller built (e.g. the
 # driver's own vanilla SparkSession), where missing values would crash the
 # events scan (legacy nanos-timestamp fixtures) or drift timestamp
 # rendering vs the oracle. All three are runtime-settable SQLConfs.
@@ -48,59 +40,37 @@ _REQUIRED_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
 }
-_CONFED_SESSIONS: set[str] = set()
 
 
-def _session_key(spark: SparkSession) -> str:
-    """Stable identity for a live session: the Spark applicationId.
-
-    ``id(spark)`` is unsafe as a cache key — CPython reuses addresses after
-    GC, so a new session could silently hit a dead session's entries and
-    skip the correctness-critical conf re-assertion (nanosAsLong, UTC).
-    applicationId is unique per SparkContext lifetime.
-    """
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect or stopped context: degrade per-object
-        return f"py-id-{id(spark)}"
-    # applicationId alone conflates spark.newSession() children with their
-    # parent (same SparkContext, FRESH SQLConf) — the conf assertion would
-    # be skipped for the child and nanosAsLong/UTC silently unset (r13
-    # review). The py4j target id names the JVM SparkSession object
-    # (monotonic per gateway, never reused while live).
-    try:
-        return f"{app}/{spark._jsparkSession._target_id}"
-    except Exception:
-        return app
+def _jvm_session(spark: SparkSession) -> str:
+    """The py4j id of the JVM SparkSession. ``spark.newSession()``
+    children share their parent's application but get a FRESH SQLConf,
+    so conf and catalog entries are kept per JVM session (the ids are
+    monotonic per gateway, never reused while live)."""
+    return spark._jsparkSession._target_id
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
-    key = _session_key(spark)
-    if key in _CONFED_SESSIONS:
+    key = ("tables.confs", _jvm_session(spark))
+    if session_cache.get(spark, key):
         return
     for k, v in _REQUIRED_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static/locked conf on some deployment: leave as-is
-    _CONFED_SESSIONS.add(key)
-    # A new application means every older application's cached entries are
-    # dead (their DataFrames point at a stopped context) — drop them so the
-    # caches cannot grow across sequential sessions in one process.
-    for stale in [k for k in _CONFED_SESSIONS if k != key]:
-        _CONFED_SESSIONS.discard(stale)
-    for ck in [ck for ck in _CATALOG if ck[0] != key]:
-        _CATALOG.pop(ck, None)
-    for ck in [ck for ck in _FANOUT if ck[0] != key]:
-        _FANOUT.pop(ck, None)
+    session_cache.put(spark, key, True)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_confs(spark)
-    key = (_session_key(spark), sf_dir, name)
-    cached = _CATALOG.get(key)
+    # Catalog entry: re-reading a parquet path re-lists files and re-reads
+    # footers on the driver (~100-200 ms per table). It lives for the
+    # application, see session_cache.
+    key = ("tables.table", _jvm_session(spark), sf_dir, name)
+    cached = session_cache.get(spark, key)
     if cached is not None:
         return cached
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -122,15 +92,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Session tz is UTC (ensure_session_confs), so this cast is
             # value-preserving: the NTZ wall clock IS the UTC instant.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _CATALOG[key] = df
+    session_cache.put(spark, key, df)
     return df
 
-
-# Fanned-relation cache: one materialized fan-out per (session, sf_dir,
-# table), shared by every full-scan consumer in the session (same cost
-# model as the bucketed landings: pay once, serve many). Purged alongside
-# _CATALOG when a new application appears (ensure_session_confs).
-_FANOUT: dict[tuple[str, str, str], DataFrame] = {}
 
 # Identity-gate caps: fan out ONLY a scan that is both narrow (fewer
 # input splits than half the cores — at real scale corpora arrive in
@@ -161,8 +125,9 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     identity gates keep this a fixture-only move: a scan with >= cores/2
     input splits, or one whose Catalyst-stats size exceeds
     ``_FANOUT_MAX_BYTES``, is returned un-fanned (at 100 TB both gates
-    trip and this function IS :func:`table`). ``SPARK_GRAFT_FANOUT=0``
-    opts out entirely (the A/B lever, mirroring the landing levers).
+    trip and this function IS :func:`table`). One fanned relation per
+    (JVM session, sf_dir, table) serves every full-scan consumer: pay
+    once, serve many. It lives for the application, see session_cache.
 
     ``persist()`` rather than ``localCheckpoint()`` deliberately: an
     externally cleared cache (``spark.catalog.clearCache()`` — bench.py
@@ -174,10 +139,8 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     persist when ``storageLevel`` shows an external clear dropped it.
     """
     df = table(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
-        return df
-    key = (_session_key(spark), sf_dir, name)
-    cached = _FANOUT.get(key)
+    key = ("tables.fanout", _jvm_session(spark), sf_dir, name)
+    cached = session_cache.get(spark, key)
     if cached is not None:
         try:
             lvl = cached.storageLevel
@@ -198,5 +161,5 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         fanned = df.repartition(cores).persist()
     except Exception:  # noqa: BLE001 — the shim must never break a read
         return df
-    _FANOUT[key] = fanned
+    session_cache.put(spark, key, fanned)
     return fanned

@@ -18,3 +18,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def empty_session_cache(monkeypatch):
+    """Run the test on an empty application cache; the live session's
+    entries come back untouched afterwards."""
+    from franzoxide_spark import session_cache
+
+    monkeypatch.setattr(session_cache, "_app_id", None)
+    monkeypatch.setattr(session_cache, "_entries", {})

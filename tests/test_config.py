@@ -301,23 +301,30 @@ class _FakeSC:
         self.applicationId = app_id
 
 
+class _FakeJSession:
+    def __init__(self, target_id):
+        self._target_id = target_id
+
+
 class _FakeSession:
     """Duck-typed SparkSession standing in for two SEQUENTIAL real sessions
     (one JVM allows one SparkContext at a time, so sequential applications
     are the realistic hazard)."""
 
-    def __init__(self, app_id):
+    def __init__(self, app_id, target_id="o1"):
         self.sparkContext = _FakeSC(app_id)
+        self._jsparkSession = _FakeJSession(target_id)
         self.conf = _FakeConf()
 
 
-def test_session_caches_keyed_on_application_id():
+def test_session_caches_keyed_on_application_id(empty_session_cache):
     """r3 VERDICT hazard 2: id(spark)-keyed caches alias when a GC'd
     session object's id() is reused — a stale hit would silently skip the
-    correctness-critical conf re-assertion (nanosAsLong, UTC). Keys must be
-    applicationId, and a NEW application must (a) get the confs re-asserted
-    and (b) evict the dead application's catalog entries."""
-    from franzoxide_spark import tables
+    correctness-critical conf re-assertion (nanosAsLong, UTC). A NEW
+    application must (a) get the confs re-asserted and (b) not see the
+    dead application's catalog entries, even when its JVM session id
+    collides with the dead one's."""
+    from franzoxide_spark import session_cache, tables
 
     s1 = _FakeSession("app-1")
     tables.ensure_session_confs(s1)
@@ -326,46 +333,41 @@ def test_session_caches_keyed_on_application_id():
     tables.ensure_session_confs(s1)
     assert len(s1.conf.sets) == len(tables._REQUIRED_CONFS)
 
-    # simulate the id()-reuse hazard directly: a new application whose
-    # session object could share the old one's memory address
-    tables._CATALOG[("app-1", "/sf", "orders")] = object()
-    s2 = _FakeSession("app-2")
+    key = ("tables.table", "o1", "/sf", "orders")
+    session_cache.put(s1, key, object())
+    s2 = _FakeSession("app-2")  # same JVM session id as s1
     tables.ensure_session_confs(s2)
     assert dict(s2.conf.sets) == tables._REQUIRED_CONFS, (
         "new application did not get confs re-asserted"
     )
-    assert ("app-1", "/sf", "orders") not in tables._CATALOG, (
-        "dead application's catalog entries were not evicted"
+    assert session_cache.get(s2, key) is None, (
+        "dead application's catalog entry was served"
     )
-    assert "app-1" not in tables._CONFED_SESSIONS
 
 
-def test_ivf_cache_evicts_stale_applications():
-    """r3 VERDICT hazard 1: _IVF_INDEX_CACHE must unpersist+drop entries of
-    other (stopped) applications instead of pinning their executor storage
-    for the process lifetime."""
-    from franzoxide_spark.operators import similarity
+def test_ivf_cache_evicts_stale_applications(spark, empty_session_cache):
+    """r3 VERDICT hazard 1: an IVF index built by another (stopped)
+    application must never be served; the next build rebuilds. Its
+    persisted blocks died with its SparkContext (pinned in a subprocess
+    by test_session_cache.py::test_stale_ivf_index_holds_no_storage)."""
+    from franzoxide_spark import session_cache
+    from franzoxide_spark.operators.similarity import build_ivf_index
 
-    class _FakeDF:
-        def __init__(self):
-            self.unpersisted = False
+    class _Built(Exception):
+        pass
 
-        def unpersist(self):
-            self.unpersisted = True
+    class _FakeEmb:
+        def __init__(self, session):
+            self.sparkSession = session
 
-    class _RaisingDF(_FakeDF):
-        def unpersist(self):
-            self.unpersisted = True
-            raise RuntimeError("SparkContext stopped")
+        def select(self, *cols):
+            raise _Built  # the build path started: no cached hit
 
-    stale_a, stale_b = _FakeDF(), _RaisingDF()
-    similarity._IVF_INDEX_CACHE.clear()
-    similarity._IVF_INDEX_CACHE[("app-old", "k", 16, 42)] = (None, stale_a)
-    similarity._IVF_INDEX_CACHE[("app-dead", "k", 16, 42)] = (None, stale_b)
-    similarity._IVF_INDEX_CACHE[("app-new", "k", 16, 42)] = (None, _FakeDF())
-    similarity._evict_stale_ivf_entries("app-new")
-    assert list(similarity._IVF_INDEX_CACHE) == [("app-new", "k", 16, 42)]
-    assert stale_a.unpersisted
-    # a frame whose context already died must still be dropped
-    assert stale_b.unpersisted
-    similarity._IVF_INDEX_CACHE.clear()
+    old, new = _FakeSession("app-old"), _FakeSession("app-new")
+    planted = (object(), object())
+    session_cache.put(old, ("similarity.ivf", "k", 16, 42), planted)
+    assert build_ivf_index(_FakeEmb(old), "id", "v", cache_key="k") is planted
+    with pytest.raises(_Built):
+        build_ivf_index(_FakeEmb(new), "id", "v", cache_key="k")
+    # dropped, not just hidden: going back to the old id finds nothing
+    assert session_cache.get(old, ("similarity.ivf", "k", 16, 42)) is None

@@ -2,18 +2,19 @@
 single-split fixture scans (the generalized q56 fix, r16).
 
 Contract under test: row identity with the plain catalog relation,
-once-per-session materialization (same object back), the
-SPARK_GRAFT_FANOUT=0 opt-out, the identity gates (many-split and
-oversized scans come back un-fanned), and actual parallelism (the
-fanned relation plans >1 partition where the plain scan plans 1)."""
+once-per-session materialization (same object back), the identity
+gates (many-split and oversized scans come back un-fanned, and the
+gate result is not cached), the application lifetime of the memoized
+relation, and actual parallelism (the fanned relation plans >1
+partition where the plain scan plans 1)."""
 
 from __future__ import annotations
 
-import os
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
-from franzoxide_spark import tables
+from franzoxide_spark import session_cache, tables
 from franzoxide_spark.tables import fanned_table, table
 
 
@@ -43,37 +44,30 @@ def test_fanned_table_actually_fans_out(spark, sf_dir):
     )
 
 
-def test_fanout_env_lever_returns_plain_relation(spark, sf_dir):
-    os.environ["SPARK_GRAFT_FANOUT"] = "0"
-    try:
-        df = fanned_table(spark, sf_dir, "events")
-        assert df is table(spark, sf_dir, "events")  # the catalog object
-    finally:
-        os.environ.pop("SPARK_GRAFT_FANOUT", None)
-
-
-def test_fanout_size_gate_returns_plain_relation(spark, sf_dir, monkeypatch):
+def test_fanout_size_gate_returns_plain_relation(
+    spark, sf_dir, monkeypatch, empty_session_cache
+):
     # an "oversized" scan (cap forced to 1 byte) must come back un-fanned
     # so the block manager is never asked to pin a big table
     monkeypatch.setattr(tables, "_FANOUT_MAX_BYTES", 1)
-    key = (tables._session_key(spark), sf_dir, "orders")
-    tables._FANOUT.pop(key, None)
-    try:
-        df = fanned_table(spark, sf_dir, "orders")
-        assert df is table(spark, sf_dir, "orders")
-        assert key not in tables._FANOUT  # gate result is not cached
-    finally:
-        tables._FANOUT.pop(key, None)
+    df = fanned_table(spark, sf_dir, "orders")
+    assert df is table(spark, sf_dir, "orders")
+    key = ("tables.fanout", tables._jvm_session(spark), sf_dir, "orders")
+    assert session_cache.get(spark, key) is None  # gate result not cached
 
 
-def test_fanout_cache_purged_with_stale_sessions(spark, sf_dir):
-    # plant a fake stale-session entry; the next ensure_session_confs on
-    # the live session must purge it (the _CATALOG lifecycle, extended)
-    stale_key = ("dead-app/0", sf_dir, "documents")
-    tables._FANOUT[stale_key] = table(spark, sf_dir, "documents")
-    tables._CONFED_SESSIONS.discard(tables._session_key(spark))
-    tables.ensure_session_confs(spark)
-    assert stale_key not in tables._FANOUT
+def test_fanout_cache_purged_with_stale_sessions(
+    spark, sf_dir, empty_session_cache
+):
+    # plant a dead application's entry under the live session's own key
+    # (a reused JVM session id); the live application must not serve it
+    dead = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="dead"))
+    key = ("tables.fanout", tables._jvm_session(spark), sf_dir, "documents")
+    planted = object()
+    session_cache.put(dead, key, planted)
+    fanned = fanned_table(spark, sf_dir, "documents")
+    assert fanned is not planted
+    assert session_cache.get(spark, key) is fanned
 
 
 def test_fanned_relation_survives_external_cache_clear(spark, sf_dir):

@@ -488,16 +488,20 @@ def test_ngram_rep_stats_known_values(spark):
     assert rows == {1: (5, 2, 3), 2: (3, 3, 1), 3: (0, 0, 0)}
 
 
-def test_repetition_gate_plan_is_shuffle_free(spark, sf_dir, monkeypatch):
+def test_repetition_gate_plan_is_shuffle_free(
+    spark, sf_dir, monkeypatch, empty_session_cache
+):
     """The whole gate must stay map-side: no Exchange anywhere in the
     physical plan (the 100 TB property the operator exists for). Pinned
-    with the fixture fan-out lever OFF: at scale fanned_table is
-    identity, so the operator's own shape — what this test pins — is
-    the plain-scan plan; the fanned fixture path adds one round-robin
-    exchange that exists only below the identity gates."""
+    through the size gate that makes fanned_table the identity at
+    scale, so the operator's own shape — what this test pins — is the
+    plain-scan plan; the fanned fixture path adds one round-robin
+    exchange that exists only below the identity gates. The empty cache
+    keeps an earlier test's fanned relation from being served."""
+    from franzoxide_spark import tables
     from franzoxide_spark.queries.llm import q58
 
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "0")
+    monkeypatch.setattr(tables, "_FANOUT_MAX_BYTES", 0)
     plan = q58(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
