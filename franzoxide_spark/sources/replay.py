@@ -1,10 +1,9 @@
 """Kafka-replay source: a custom Python DataSource (Spark 4
 ``pyspark.sql.datasource``) that serves a staged, GROWING KafkaRecord
 parquet log with real broker semantics — per-partition contiguous
-offsets, ``latestOffset`` re-scanning the log end each trigger (so
+offsets, ``latestOffset`` re-reading the log end each trigger (so
 batches track data arrival exactly as they do against a live broker),
-offset-dict checkpointing, and one Spark input partition per Kafka
-partition.
+and offset-dict checkpointing.
 
 Why it exists: the environment has no Kafka broker (mirrored by the
 reference's own disabled integration CI, .github/workflows/ci.yml:60-69),
@@ -16,24 +15,40 @@ per-partition positions, new appends flow as new micro-batches),
 implemented against local fixtures. Swapping ``format("kafka_replay")``
 for ``format("kafka")`` is a config change.
 
-Contract note: ``latestOffset()`` reports the TRUE end of the log —
-rate limiting is deliberately NOT simulated there. An earlier draft
-advanced an in-memory frontier by ``batch.size`` per trigger; that
-frontier restarts at zero after a crash, Spark then records the
-gone-backwards offset in the WAL, and the next batch REPLAYS committed
-data (observed as duplicates in the resume test before this was fixed).
-The offsets a streaming source reports must be derivable from the
-external system, never from reader-process memory.
+Contract note: the offsets this source reports are derived from the
+log's files, never from reader-process memory. ``latestOffset()``
+reports the TRUE end of the log — rate limiting is deliberately NOT
+simulated there. An earlier draft advanced an in-memory frontier by
+``batch.size`` per trigger; that frontier restarts at zero after a
+crash, Spark then records the gone-backwards offset in the WAL, and the
+next batch REPLAYS committed data (observed as duplicates in the resume
+test before this was fixed). The reader does keep one thing in memory,
+the per-file index below, but only as a cache of the files: an entry is
+trusted while its file's ``(st_mtime_ns, st_size, st_ino)`` is
+unchanged, and a restarted reader starts with an empty index and reads
+every file once. The log is append-only: a file, once visible, is
+complete, and offsets below a partition's end are all in visible files.
 
 Offsets are dicts ``{partition(str): next_offset(int)}`` — JSON-encoded
 by Spark into the checkpoint WAL.
 
-Scale shape: ``partitions(start, end)`` emits one InputPartition per
-Kafka partition; executors read their slice with parquet predicate
-pushdown (pyarrow filters on partition + offset range) and yield Arrow
-record batches — no per-row Python objects. ``latestOffset`` reads only
-the (partition, offset) columns on the driver; a production source gets
-this from broker metadata instead of a scan.
+Scale shape: a micro-batch's cost is dominated by its Python tasks,
+not its rows (on a 4-core host each read task cost ~60-75 ms whatever
+its row count). So
+``partitions(start, end)`` packs the per-partition offset ranges into at
+most ``maxTasks`` InputPartitions, balanced by row count.
+:func:`read_replay_stream` sets ``maxTasks`` to the session's
+``defaultParallelism`` (one task per core); without the option the cap is
+the Kafka partition count, i.e. one task per partition, as the batch
+face runs. The driver-side reader keeps a per-file index, file ->
+``{partition: (min, max+1)}``, over the file list of pyarrow's dataset
+discovery: ``latestOffset`` reads the (partition, offset) columns of new
+or changed files only, and each range carries only the files whose
+offsets meet it. Executors read those files with parquet predicate
+pushdown (pyarrow filters on partition + offset range, so the file list
+only has to be a superset) and yield non-empty Arrow record batches — no
+per-row Python objects. A production source gets the offsets from broker
+metadata instead of files.
 """
 
 from __future__ import annotations
@@ -95,83 +110,186 @@ def stage_replay(
 
 
 @dataclass
-class _OffsetRange(InputPartition):
-    path: str
+class _Range:
+    """Offsets ``[start, end)`` of one Kafka partition, and the log files
+    that hold some of them."""
+
     partition: int
     start: int
     end: int
+    files: list[str]
 
 
-def _read_range(rng: _OffsetRange):
-    """Executor-side slice read: parquet predicate pushdown via pyarrow
-    filters, yielded as Arrow record batches (no Python row objects)."""
+@dataclass
+class _ReplayTask(InputPartition):
+    """One Spark task: the offset ranges it reads."""
+
+    ranges: list[_Range]
+
+
+def _file_ranges(path: str) -> dict[int, tuple[int, int]]:
+    """``{partition: (min offset, max offset + 1)}`` of one log file."""
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        rng.path,
-        columns=_COLUMNS,
-        filters=[
-            ("partition", "=", rng.partition),
-            ("offset", ">=", rng.start),
-            ("offset", "<", rng.end),
-        ],
+    grouped = (
+        pq.read_table(path, columns=["partition", "offset"])
+        .group_by("partition")
+        .aggregate([("offset", "min"), ("offset", "max")])
     )
-    yield from tbl.to_batches()
-
-
-def _partition_ends(path: str) -> dict[str, int]:
-    """Per-partition end offset (max+1) of the staged log as it exists
-    NOW — re-read per call so appended data advances the frontier.
-
-    An empty/not-yet-created log is a VALID start state (a real Kafka
-    consumer streams an empty topic fine and picks data up as it
-    arrives, r13 review): report no partitions; the next trigger's
-    re-scan sees whatever has been staged since."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    if not os.path.exists(path):
-        return {}
-    if os.path.isdir(path) and not any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
-        return {}
-    tbl = pq.read_table(path, columns=["partition", "offset"])
-    grouped = tbl.group_by("partition").aggregate([("offset", "max")])
     return {
-        str(part): int(mx) + 1
-        for part, mx in zip(
-            grouped["partition"].to_pylist(), grouped["offset_max"].to_pylist()
+        int(p): (int(lo), int(hi) + 1)
+        for p, lo, hi in zip(
+            grouped["partition"].to_pylist(),
+            grouped["offset_min"].to_pylist(),
+            grouped["offset_max"].to_pylist(),
         )
     }
 
 
+class _LogIndex:
+    """Per-file index of a replay log: file -> ``{partition: (min,
+    max+1)}``, over the files pyarrow's dataset discovery lists. An
+    entry is read once and kept while its file's ``(st_mtime_ns,
+    st_size, st_ino)`` is unchanged; it is dropped when the file leaves
+    the listing."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+        self._entries: dict[str, tuple[tuple, dict[int, tuple[int, int]]]] = {}
+
+    def refresh(self) -> dict[str, int]:
+        """Bring the index up to the log as it exists NOW and return the
+        per-partition end offsets (max+1).
+
+        An empty/not-yet-created log is a VALID start state (a real Kafka
+        consumer streams an empty topic fine and picks data up as it
+        arrives, r13 review): report no partitions; the next refresh sees
+        whatever has been staged since."""
+        import os
+
+        import pyarrow.dataset as ds
+
+        try:
+            files = ds.dataset(self.path, format="parquet").files
+        except FileNotFoundError:
+            files = []
+        entries = {}
+        for f in files:
+            try:
+                st = os.stat(f)
+                stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+                old = self._entries.get(f)
+                # stat before reading: a file replaced after the stat gets
+                # a new stamp, so the next refresh reads it again
+                entries[f] = (
+                    old if old is not None and old[0] == stamp
+                    else (stamp, _file_ranges(f))
+                )
+            except FileNotFoundError:
+                continue  # deleted since the listing
+        self._entries = entries
+        ends: dict[int, int] = {}
+        for _, ranges in entries.values():
+            for p, (_, hi) in ranges.items():
+                ends[p] = max(ends.get(p, 0), hi)
+        # one key order whatever the files' order: Spark compares offsets
+        # by their JSON, and a reordered dict would start an empty batch
+        return {str(p): e for p, e in sorted(ends.items())}
+
+    def plan(self, start: dict, end: dict, cap: int | None) -> list[_ReplayTask]:
+        """The offset ranges ``[start, end)``, each carrying the indexed
+        files whose offsets meet it, packed into at most ``cap`` tasks
+        (default: one per range) balanced by row count."""
+        ranges = []
+        for key, e in end.items():
+            p, s, e = int(key), int(start.get(key, 0)), int(e)
+            if e > s:
+                files = sorted(
+                    f for f, (_, fr) in self._entries.items()
+                    if p in fr and fr[p][0] < e and fr[p][1] > s
+                )
+                ranges.append(_Range(p, s, e, files))
+        return _pack(ranges, cap or len(ranges))
+
+
+def _pack(ranges: list[_Range], cap: int) -> list[_ReplayTask]:
+    """Largest range first into the task with the fewest rows so far:
+    ``min(len(ranges), cap)`` tasks whose row counts differ by at most
+    the largest range."""
+    tasks = [_ReplayTask([]) for _ in range(min(len(ranges), cap))]
+    rows = [0] * len(tasks)
+    for r in sorted(ranges, key=lambda r: r.end - r.start, reverse=True):
+        i = rows.index(min(rows))
+        tasks[i].ranges.append(r)
+        rows[i] += r.end - r.start
+    return tasks
+
+
+def _read_task(task: _ReplayTask):
+    """Executor-side read of a task's ranges from their files only:
+    parquet predicate pushdown via pyarrow filters (one conjunction per
+    range), yielded as non-empty Arrow record batches (no Python row
+    objects)."""
+    import pyarrow.parquet as pq
+
+    files = sorted({f for r in task.ranges for f in r.files})
+    if not files:
+        return
+    tbl = pq.read_table(
+        files,
+        columns=_COLUMNS,
+        filters=[
+            [
+                ("partition", "=", r.partition),
+                ("offset", ">=", r.start),
+                ("offset", "<", r.end),
+            ]
+            for r in task.ranges
+        ],
+    )
+    for batch in tbl.to_batches():
+        if batch.num_rows:
+            yield batch
+
+
+def _options(options) -> tuple[str, int | None]:
+    """The ``path`` option and the ``maxTasks`` cap (None: one task per
+    Kafka partition)."""
+    path = options.get("path")
+    if not path:
+        raise ValueError("kafka_replay requires a 'path' option")
+    cap = options.get("maxTasks")
+    if cap is None:
+        return path, None
+    if not str(cap).isdigit() or int(cap) < 1:
+        raise ValueError(
+            f"kafka_replay 'maxTasks' must be a positive integer, got {cap!r}"
+        )
+    return path, int(cap)
+
+
 class _ReplayStreamReader(DataSourceStreamReader):
     def __init__(self, options) -> None:
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("kafka_replay requires a 'path' option")
+        path, self._cap = _options(options)
+        self._index = _LogIndex(path)
 
     def initialOffset(self) -> dict:
-        return {p: 0 for p in _partition_ends(self._path)}
+        return {p: 0 for p in self._index.refresh()}
 
     def latestOffset(self) -> dict:
-        # the true current end of the log, re-scanned per trigger: new
-        # appends become the next micro-batch; nothing here depends on
-        # reader-process memory, so a restarted query resumes exactly
-        # from the WAL offsets (see the contract note in the module doc)
-        return _partition_ends(self._path)
+        # the true current end of the log, re-read per trigger: new
+        # appends become the next micro-batch (see the contract note in
+        # the module doc)
+        return self._index.refresh()
 
     def partitions(self, start: dict, end: dict):
-        return [
-            _OffsetRange(self._path, int(p), int(start.get(p, 0)), int(e))
-            for p, e in end.items()
-            if int(e) > int(start.get(p, 0))
-        ]
+        # a restarted query re-plans its last batch from the WAL before
+        # it asks for latestOffset, so the index may not reach `end` yet
+        self._index.refresh()
+        return self._index.plan(start, end, self._cap)
 
-    def read(self, partition: _OffsetRange):
-        return _read_range(partition)
+    def read(self, partition: _ReplayTask):
+        return _read_task(partition)
 
     def commit(self, end: dict) -> None:
         # offsets live in Spark's checkpoint WAL; nothing external to ack
@@ -180,18 +298,16 @@ class _ReplayStreamReader(DataSourceStreamReader):
 
 class _ReplayBatchReader(DataSourceReader):
     def __init__(self, options) -> None:
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("kafka_replay requires a 'path' option")
+        self._path, self._cap = _options(options)
 
     def partitions(self):
-        return [
-            _OffsetRange(self._path, int(p), 0, e)
-            for p, e in _partition_ends(self._path).items()
-        ]
+        index = _LogIndex(self._path)
+        # an empty log still needs a task: given none, Spark reads one
+        # `None` partition
+        return index.plan({}, index.refresh(), self._cap) or [_ReplayTask([])]
 
-    def read(self, partition: _OffsetRange):
-        return _read_range(partition)
+    def read(self, partition: _ReplayTask):
+        return _read_task(partition)
 
 
 class KafkaReplayDataSource(DataSource):
@@ -218,9 +334,14 @@ def register_replay_source(spark: SparkSession) -> None:
 
 
 def read_replay_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The replay log as a stream whose micro-batches each run at most
+    one read task per core of the session."""
     register_replay_source(spark)
     return (
-        spark.readStream.format("kafka_replay").option("path", path).load()
+        spark.readStream.format("kafka_replay")
+        .option("path", path)
+        .option("maxTasks", spark.sparkContext.defaultParallelism)
+        .load()
     )
 
 
